@@ -167,13 +167,7 @@ def stream_foreachbatch_hive(spark: SparkSession, sf_dir: str) -> DataFrame:
     The re-read table's per-partition counts must equal the source."""
     out_dir = os.path.join(harness._tmpdir("stream_hive_"), "events_tbl")
     s = harness.events_stream(spark, sf_dir)
-    # volume-scaled epoch-write parallelism: write_epoch's keyed
-    # repartition(dt, hr) sizes itself from spark.sql.shuffle.partitions
-    with harness._state_conf_scope(
-        spark, harness.events_stream_partitions(sf_dir)
-    ):
-        q = sink.start_hive_sink(s, out_dir)
-        q.awaitTermination()
+    sink.start_hive_sink(s, out_dir).awaitTermination()
     sink.finalize_partitions(spark, out_dir)
     table = sink.read_sink_table(spark, out_dir)
     return table.groupBy(
@@ -348,12 +342,7 @@ def stream_text_ingest_hive(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", max(1, (n_files + 1) // 2))
         .csv(src)
     )
-    # volume-scaled epoch-write parallelism (see stream_foreachbatch_hive)
-    with harness._state_conf_scope(
-        spark, harness.events_stream_partitions(sf_dir)
-    ):
-        q = sink.start_hive_sink(s, out_dir)
-        q.awaitTermination()
+    sink.start_hive_sink(s, out_dir).awaitTermination()
     sink.finalize_partitions(spark, out_dir)
     table = sink.read_sink_table(spark, out_dir)
     return table.groupBy(

@@ -8,6 +8,16 @@ channel transaction: ``foreachBatch`` writes the epoch partitioned by
 replayed epoch (the analogue of Flume's rollback→redeliver) overwrites
 its own previous output instead of duplicating — checkpoint WAL +
 idempotent epoch writes = exactly-once table state (SURVEY.md §3.3).
+
+Each epoch is an ordinary batch write with one writer per scheduler
+slot (``defaultParallelism``: the local core count, or the executors'
+total cores on a cluster). Hashing rows on (dt, hr) sends each Hive
+partition to exactly one writer, so an epoch still leaves one file per
+(epoch, dt, hr), rolled at ``maxRecordsPerFile``. The writer count is
+pinned because AQE's byte-based coalescing is the wrong rule here: a
+write's cost is per file, not per byte, and coalescing a small epoch
+by bytes would leave one task writing all of its partition files in
+series.
 """
 
 from __future__ import annotations
@@ -34,18 +44,20 @@ def write_epoch(
 ) -> None:
     """Idempotent epoch write: partition layout epoch=/dt=/hr=.
 
-    Dynamic overwrite scoped to this epoch's partitions — a retried
-    epoch replaces exactly the partitions it wrote before. At scale the
-    repartition bounds concurrent writers per Hive partition (the
-    `maxOpenFiles` analogue) and maxRecordsPerFile is the roll policy.
+    Dynamic overwrite scoped to this epoch's partitions, as a writer
+    option so the caller's session conf is untouched: a retried epoch
+    replaces exactly the partitions it wrote before. One writer per
+    scheduler slot, hashed on (dt, hr) so each Hive partition gets one
+    file per epoch (rolled at ``maxRecordsPerFile``). The count is pinned
+    because AQE's byte-based coalescing misjudges a per-file cost.
     """
-    spark = epoch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    writers = epoch_df.sparkSession.sparkContext.defaultParallelism
     (
         with_partition_keys(epoch_df)
         .withColumn("epoch", F.lit(epoch_id))
-        .repartition(F.col("dt"), F.col("hr"))
+        .repartition(writers, "dt", "hr")
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .option("maxRecordsPerFile", max_records_per_file)
         .partitionBy("epoch", "dt", "hr")
         .parquet(out_dir)
