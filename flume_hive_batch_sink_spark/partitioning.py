@@ -14,13 +14,15 @@ cols)`` is never coalesced by AQE — with ``n`` taken from the session's
 shuffle in the job follows (bench.py derives it from input volume;
 a cluster deployment sets it with the data size). Nothing here is a
 local[32] constant.
+
+Input volume itself is measured here and nowhere else: ``input_bytes``
+reads it through the session's Hadoop FileSystem, so a local path and
+its ``file://``/``hdfs://``/``s3a://`` forms size alike.
 """
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -59,60 +61,22 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.set(k, old)
 
 
-def fanout_session(spark: SparkSession) -> SparkSession:
-    """A clone of ``spark`` (same SparkContext, same runtime confs —
-    including the driver's timezone/legacy settings) with AQE disabled:
-    plans BUILT from the clone execute AQE-free wherever they are later
-    executed, without touching the caller's session — the per-query
-    version of a set/restore conf scope, robust to the driver executing
-    the returned DataFrame long after the builder returned.
-
-    Round-16 status: NOT wired into any operator. VERDICT r15 item 1
-    proposed scoping AQE off around the fan-out dedup pipelines on the
-    strength of a round-15 "llm_jaccard_dedup 4.6 s with AQE vs 2.4 s
-    without" measurement; an interleaved A/B on the current code
-    (scripts/probe_fanout_aqe.py, medians of 5 at sf0.1) measured the
-    clone NEUTRAL-to-slightly-negative (llm_near_dedup_minhash 8.45 s
-    AQE-on vs 8.72 s off; llm_jaccard_dedup 2.95 s vs 3.06 s), and a
-    session-wide AQE toggle reproduced the null result — the round-15
-    AQE-off figure predated the explicit fan-out repartitions and was
-    capturing the same under-parallelization those now fix. Kept (with
-    the probe) as the validated mechanism + negative result so the next
-    round does not re-derive either.
-
-    ``SPARK_GRAFT_FANOUT_AQE=1`` makes it a no-op (returns ``spark``);
-    any failure to clone (e.g. a non-classic session) falls back to the
-    caller's session unchanged.
-    """
-    if os.environ.get("SPARK_GRAFT_FANOUT_AQE") == "1":
-        return spark
-    try:
-        clone = SparkSession(
-            spark.sparkContext, spark._jsparkSession.cloneSession()
-        )
-        clone.conf.set("spark.sql.adaptive.enabled", "false")
-        return clone
-    except Exception:
-        return spark
+def input_bytes(spark: SparkSession, path: str) -> int:
+    """Bytes under ``path`` (a file or a directory tree, any scheme the
+    session's Hadoop conf resolves: local, ``file://``, ``hdfs://``,
+    ``s3a://``), or 0 when it does not exist. The one measure of input
+    volume that every size rule in the engine reads."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(p):
+        return 0
+    return int(fs.getContentSummary(p).getLength())
 
 
-def input_scaled_partitions(path_or_bytes: str | int) -> int:
-    """Shuffle/state partition count derived from input volume — the
-    same ~32 MB/partition rule bench.py applies to the batch headline
-    session (floor 8, cap 2048), so partition counts scale with the
-    data instead of being a local-core-count constant. Accepts a
-    directory/file path (sums parquet/csv/tsv file sizes) or a byte
-    count."""
-    if isinstance(path_or_bytes, int):
-        n_bytes = path_or_bytes
-    else:
-        p = Path(path_or_bytes)
-        if p.is_dir():
-            n_bytes = sum(
-                f.stat().st_size
-                for pat in ("*.parquet", "*.csv", "*.tsv")
-                for f in p.glob(pat)
-            )
-        else:
-            n_bytes = p.stat().st_size if p.exists() else 0
+def input_scaled_partitions(n_bytes: int) -> int:
+    """Shuffle/state partition count derived from input volume — ~32 MB
+    per partition, floor 8, cap 2048 — for the stream state partitions
+    and bench.py's headline session, so partition counts scale with the
+    data instead of being a local-core-count constant."""
     return max(8, min(2048, int(n_bytes / (32 << 20))))

@@ -19,10 +19,22 @@ swap ``SourceConfig.transport`` and nothing downstream changes.
 from __future__ import annotations
 
 import atexit
+import json
+import os
 import shutil
 import tempfile
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
+
+from flume_hive_batch_sink_spark.partitioning import (
+    input_bytes,
+    input_scaled_partitions,
+    scoped_conf,
+)
+from flume_hive_batch_sink_spark.streaming import source
+
+EVENTS_SCHEMA = source.EVENTS_SCHEMA
 
 
 def _tmpdir(prefix: str) -> str:
@@ -34,30 +46,19 @@ def _tmpdir(prefix: str) -> str:
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
 
-EVENTS_SCHEMA = (
-    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-    "event_type STRING, value DOUBLE, props STRING"
-)
 
-
-def events_stream_partitions(sf_dir: str) -> int:
+def events_stream_partitions(spark: SparkSession, sf_dir: str) -> int:
     """State/shuffle partition count for a replay of the events fixture,
-    derived from the fixture's bytes (see _state_conf_scope)."""
-    from flume_hive_batch_sink_spark.partitioning import (
-        input_scaled_partitions,
+    derived from the fixture's bytes (see run_with_progress)."""
+    return input_scaled_partitions(
+        input_bytes(spark, os.path.join(sf_dir, "events.parquet"))
     )
-
-    import os as _os
-
-    return input_scaled_partitions(_os.path.join(sf_dir, "events.parquet"))
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as a file-source stream (single batch under
     availableNow). Routed through the transport seam (source.py): the
     same call sites serve Kafka by swapping SourceConfig.transport."""
-    from flume_hive_batch_sink_spark.streaming import source
-
     return source.open_events_stream(
         spark, source.SourceConfig(transport="file", sf_dir=sf_dir)
     )
@@ -77,8 +78,6 @@ def replay_chunks(
     modification time) and ``maxFilesPerTrigger=1``. Routed through the
     transport seam (source.py) like events_stream.
     """
-    from flume_hive_batch_sink_spark.streaming import source
-
     return source.open_events_stream(
         spark,
         source.SourceConfig(
@@ -105,8 +104,6 @@ def replay_chunks_with_sentinels(
     ``late_chunk`` composes (round-15): the oldest chunk replays after
     the newer ones but BEFORE the sentinels — the adversarial schedule
     the TTL watermark clamp exists for."""
-    from flume_hive_batch_sink_spark.streaming import source
-
     return source.open_events_stream(
         spark,
         source.SourceConfig(
@@ -119,32 +116,6 @@ def replay_chunks_with_sentinels(
     )
 
 
-def _state_conf_scope(spark: SparkSession, state_partitions: int | None):
-    """Conf scope for one streaming run: when ``state_partitions`` is
-    given, pin ``spark.sql.shuffle.partitions`` (which is what sizes a
-    NEW streaming query's state-store operators — the count is recorded
-    in the checkpoint on the first batch) for the duration of the run
-    and restore after. Round-16, guide §2.2: each state partition costs
-    a per-micro-batch task + state-store commit (delta file, maintenance),
-    so a tiny replayed stream paying the session's full batch
-    parallelism per batch is pure fixed overhead — the caller derives
-    the count from STREAM VOLUME (partitioning.input_scaled_partitions,
-    the same ~32 MB/partition rule bench.py uses), so a real deployment
-    scales up with the data instead of inheriting a local constant.
-    Safe to scope because every harness run COMPLETES inside the scope
-    (availableNow + awaitTermination) and each run owns a fresh
-    checkpoint."""
-    from contextlib import nullcontext
-
-    from flume_hive_batch_sink_spark.partitioning import scoped_conf
-
-    if state_partitions is None:
-        return nullcontext()
-    return scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": str(state_partitions)}
-    )
-
-
 def run_to_memory(
     stream_df: DataFrame,
     name: str,
@@ -154,18 +125,9 @@ def run_to_memory(
 ) -> DataFrame:
     """Run a streaming DataFrame to completion (availableNow) into an
     in-memory sink and return the result table."""
-    chk = _tmpdir(f"chk_{name}_")
-    with _state_conf_scope(spark, state_partitions):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_with_progress(
+        stream_df, name, output_mode, spark, state_partitions=state_partitions
+    )[0]
 
 
 def run_with_progress(
@@ -184,8 +146,6 @@ def run_with_progress(
     regression gate (tests/test_streaming.py) read these; the ``noop``
     sink exercises the full pipeline without collecting data-sized
     output to the driver, which is what a 10M-event replay needs."""
-    import json as _json
-
     chk = _tmpdir(f"chk_{name}_")
     w = (
         stream_df.writeStream.format(fmt)
@@ -195,9 +155,19 @@ def run_with_progress(
     )
     if fmt == "memory":
         w = w.queryName(name)
-    with _state_conf_scope(spark, state_partitions):
+    # A new query's state operators take their partition count from
+    # spark.sql.shuffle.partitions and record it in the checkpoint at the
+    # first batch. Scoping it is safe: the run completes inside the block.
+    scope = (
+        nullcontext()
+        if state_partitions is None
+        else scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": str(state_partitions)}
+        )
+    )
+    with scope:
         q = w.start()
         q.awaitTermination()
-    progress = [_json.loads(p.json) for p in q.recentProgress]
+    progress = [json.loads(p.json) for p in q.recentProgress]
     result = spark.table(name) if fmt == "memory" else None
     return result, progress

@@ -45,7 +45,7 @@ def stream_agg_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return harness.run_to_memory(
         agg, _qname("agg_update"), "complete", spark,
-        state_partitions=harness.events_stream_partitions(sf_dir),
+        state_partitions=harness.events_stream_partitions(spark, sf_dir),
     )
 
 
@@ -66,7 +66,7 @@ def stream_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = harness.run_to_memory(
         deduped, _qname("dedup_wm"), "append", spark,
-        state_partitions=harness.events_stream_partitions(sf_dir),
+        state_partitions=harness.events_stream_partitions(spark, sf_dir),
     )
     return out.groupBy("event_type").agg(F.count("*").alias("n"))
 
@@ -106,7 +106,7 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return harness.run_to_memory(
         agg, _qname("watermark"), "append", spark,
-        state_partitions=harness.events_stream_partitions(sf_dir),
+        state_partitions=harness.events_stream_partitions(spark, sf_dir),
     )
 
 
@@ -149,7 +149,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return harness.run_to_memory(
         joined, _qname("ss_join"), "append", spark,
-        state_partitions=harness.events_stream_partitions(sf_dir),
+        state_partitions=harness.events_stream_partitions(spark, sf_dir),
     )
 
 
@@ -187,7 +187,7 @@ def stream_rate_source_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = harness.replay_chunks(spark, sf_dir, n_chunks=3, late_chunk=False)
     out = harness.run_to_memory(
         s.select("event_id", "event_type"), _qname("replay_smoke"), "append", spark,
-        state_partitions=harness.events_stream_partitions(sf_dir),
+        state_partitions=harness.events_stream_partitions(spark, sf_dir),
     )
     return out
 
@@ -229,7 +229,7 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emitted = harness.run_to_memory(
         out, _qname("custom_state"), "update", spark,
-        state_partitions=harness.events_stream_partitions(sf_dir),
+        state_partitions=harness.events_stream_partitions(spark, sf_dir),
     )
     return emitted.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
 
@@ -389,5 +389,5 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return harness.run_to_memory(
         agg, _qname("static_join"), "complete", spark,
-        state_partitions=harness.events_stream_partitions(sf_dir),
+        state_partitions=harness.events_stream_partitions(spark, sf_dir),
     )

@@ -122,33 +122,55 @@ def _file_chunk_stream(spark: SparkSession, cfg: SourceConfig) -> DataFrame:
     arrive late. File order is pinned via mtime (the file source lists
     by modification time) and ``maxFilesPerTrigger=1``.
 
-    The chunk files are written EXECUTOR-side in one job — repartition
-    on the chunk id, ``partitionBy("chunk")`` — so exactly one part
-    file lands per chunk directory (all rows of a chunk hash to one
-    task) and no data-sized ``toPandas()`` ever crosses the driver;
-    the driver only renames files and touches mtimes. The ntile window
-    itself is a deliberate global sort: the harness's determinism
+    The chunk files, sentinels included, are written EXECUTOR-side in
+    one job — repartition on the chunk id, ``partitionBy("chunk")`` — so
+    exactly one part file lands per chunk directory (all rows of a chunk
+    hash to one task) and no data-sized ``toPandas()`` ever crosses the
+    driver; the driver only renames files and touches mtimes. The ntile
+    window itself is a deliberate global sort: the harness's determinism
     contract (ts-ordered chunks) requires a total order, and the
     production transport is the Kafka seam, not this replay path.
     """
+    import datetime as _dt
     import shutil
 
     from pyspark.sql.window import Window
 
     ev = load(spark, cfg.sf_dir, "events")
     chunk = F.ntile(cfg.n_chunks).over(Window.orderBy("ts", "event_id"))
-    with_chunk = ev.withColumn("chunk", chunk)
+    rows = ev.withColumn("chunk", chunk)
+    order = list(range(1, cfg.n_chunks + 1))
+    if cfg.late_chunk:
+        order = order[1:] + order[:1]  # oldest chunk arrives last
+    if cfg.sentinel_offsets_min:
+        # bounded scalar pull: one max(ts) — the sentinel timestamps
+        # must sit past the whole fixture whatever the SF. Sentinels
+        # take chunk ids n_chunks+1.. and replay after every data chunk.
+        max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
+        sentinels = [
+            (
+                -(j + 1),
+                max_ts + _dt.timedelta(minutes=int(off)),
+                -1,
+                "sentinel",
+                0.0,
+                None,
+                cfg.n_chunks + j + 1,
+            )
+            for j, off in enumerate(sorted(cfg.sentinel_offsets_min))
+        ]
+        rows = rows.unionByName(
+            spark.createDataFrame(sentinels, EVENTS_SCHEMA + ", chunk INT")
+        )
+        order += [s[-1] for s in sentinels]
+
     base = _tmpdir("stream_replay_")
     src = os.path.join(base, "src")
     stage = os.path.join(base, "stage")
     os.makedirs(src, exist_ok=True)
-
-    order = list(range(1, cfg.n_chunks + 1))
-    if cfg.late_chunk:
-        order = order[1:] + order[:1]  # oldest chunk arrives last
     now = time.time()
     (
-        with_chunk.repartition(cfg.n_chunks, "chunk")
+        rows.repartition(len(order), "chunk")
         .write.partitionBy("chunk")
         .mode("overwrite")
         .parquet(stage)
@@ -161,33 +183,6 @@ def _file_chunk_stream(spark: SparkSession, cfg: SourceConfig) -> DataFrame:
         os.replace(os.path.join(cdir, parts[0]), path)
         os.utime(path, (now + i, now + i))
     shutil.rmtree(stage, ignore_errors=True)
-
-    if cfg.sentinel_offsets_min:
-        import datetime as _dt
-
-        # bounded scalar pull: one max(ts) — the sentinel timestamps
-        # must sit past the whole fixture whatever the SF
-        max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-        for j, off in enumerate(sorted(cfg.sentinel_offsets_min)):
-            row = (
-                -(j + 1),
-                max_ts + _dt.timedelta(minutes=int(off)),
-                -1,
-                "sentinel",
-                0.0,
-                None,
-            )
-            sdir = os.path.join(base, f"sentinel_stage_{j}")
-            spark.createDataFrame([row], EVENTS_SCHEMA).coalesce(
-                1
-            ).write.mode("overwrite").parquet(sdir)
-            parts = [f for f in os.listdir(sdir) if f.startswith("part-")]
-            assert len(parts) == 1
-            k = cfg.n_chunks + j
-            path = os.path.join(src, f"chunk_{k:03d}.parquet")
-            os.replace(os.path.join(sdir, parts[0]), path)
-            os.utime(path, (now + k, now + k))
-            shutil.rmtree(sdir, ignore_errors=True)
 
     return (
         spark.readStream.schema(EVENTS_SCHEMA)

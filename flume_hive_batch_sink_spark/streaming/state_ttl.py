@@ -143,7 +143,7 @@ def stream_custom_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = ttl_counters_stream(spark, src)
     emitted = harness.run_to_memory(
         out, f"custom_state_ttl_{uuid.uuid4().hex[:8]}", "update", spark,
-        state_partitions=harness.events_stream_partitions(sf_dir),
+        state_partitions=harness.events_stream_partitions(spark, sf_dir),
     )
     return (
         emitted.filter(F.col("user_id") >= 0)
